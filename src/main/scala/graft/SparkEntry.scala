@@ -9,7 +9,7 @@ object SparkEntry {
     // the caller's session tz is unknown; fixture timestamps are UTC-naive
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     F.ensure(spark)
-    P.run(spark, F.dir, P.FromNow, F.now, F.today, F.lookbackSeconds, F.zone)
+    P.run(spark, F.dir, P.FromNow, F.nowInstant, F.lookbackSeconds, F.zone)
   }
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

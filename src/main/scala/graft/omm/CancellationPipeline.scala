@@ -1,10 +1,14 @@
 package graft.omm
 
+import java.time.{Instant, ZoneId}
+import java.time.format.DateTimeFormatter
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TimeExprs
 import graft.operators.Dedup
+import graft.sources.ParquetSource
 
 /** The flagship OMM trip-cancellation pipeline, re-expressed Spark-first.
   *
@@ -38,29 +42,39 @@ object CancellationPipeline {
                        vjt: DataFrame, kvv: DataFrame, kvt: DataFrame,
                        kt: DataFrame, ot: DataFrame)
 
+  /** The 11 tables under `dir` (`<table>.parquet` each), read with their
+    * declared schemas (`OmmSchemas.tables`): no Spark job re-infers them,
+    * and a table that lacks a declared column fails here, by name
+    * (`ParquetSource`). */
   def loadTables(spark: SparkSession, dir: String): OmmTables = {
-    def rd(t: String): DataFrame = spark.read.parquet(s"$dir/$t.parquet")
+    val t = OmmSchemas.tables.map { case (name, schema) =>
+      name -> ParquetSource.table(spark, name, s"$dir/$name.parquet", schema)
+    }.toMap
     OmmTables(
-      dc = rd("deviation_cases"), ad = rd("affected_departures"),
-      blm = rd("bulletin_localized_messages"), b = rd("bulletins"),
-      dvj = rd("DatedVehicleJourney"), vj = rd("VehicleJourney"),
-      vjt = rd("VehicleJourneyTemplate"), kvv = rd("KeyVariantValue"),
-      kvt = rd("KeyVariantType"), kt = rd("KeyType"), ot = rd("ObjectType"))
+      dc = t("deviation_cases"), ad = t("affected_departures"),
+      blm = t("bulletin_localized_messages"), b = t("bulletins"),
+      dvj = t("DatedVehicleJourney"), vj = t("VehicleJourney"),
+      vjt = t("VehicleJourneyTemplate"), kvv = t("KeyVariantValue"),
+      kvt = t("KeyVariantType"), kt = t("KeyType"), ot = t("ObjectType"))
   }
 
-  private val wallClockFmt =
-    java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+  private val wallClockFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+
+  /** U2/U3 driver-side: the poll instant as `(now, today)` wall-clock
+    * strings in the OMM zone (≙ OmmConnector.java:53–59). */
+  def localNowStrings(instant: Instant, zone: String): (String, String) = {
+    val z = instant.atZone(ZoneId.of(zone))
+    (z.format(wallClockFmt), z.format(DateTimeFormatter.ISO_LOCAL_DATE))
+  }
 
   /** PAST-mode lookback bound, computed the way the reference does
-    * (OmmConnector.java:76): subtract on the *Instant*, then render the
-    * result as wall-clock in the zone. Subtracting on the wall-clock string
-    * instead would narrow/widen the re-emission window across the two DST
-    * transitions each year. */
-  def lookbackBound(now: String, zone: String, lookbackSeconds: Long): String =
-    java.time.LocalDateTime.parse(now, wallClockFmt)
-      .atZone(java.time.ZoneId.of(zone))
-      .toInstant.minusSeconds(lookbackSeconds)
-      .atZone(java.time.ZoneId.of(zone)).format(wallClockFmt)
+    * (OmmConnector.java:76): subtract on the poll *Instant*, then render
+    * the result as wall-clock in the zone. Taking a rendered wall-clock
+    * string instead would be ambiguous in the DST fall-back hour (parsing
+    * picks the earlier offset, widening the window by an hour) and would
+    * narrow/widen the re-emission window across both transitions. */
+  def lookbackBound(now: Instant, zone: String, lookbackSeconds: Long): String =
+    now.minusSeconds(lookbackSeconds).atZone(ZoneId.of(zone)).format(wallClockFmt)
 
   /** The snapshot query: J1–J10 + F1–F6 (+F2b in PAST mode) + the 17-column
     * projection, ordered by DC.last_modified (O1). `now`/`today` are the
@@ -316,9 +330,11 @@ object CancellationPipeline {
     ).as[CancellationData]
   }
 
-  /** The full batch pipeline for one poll. */
-  def run(spark: SparkSession, dir: String, mode: Mode, now: String,
-          today: String, lookbackSeconds: Long, zone: String): DataFrame =
-    dedup(parse(snapshot(loadTables(spark, dir), mode, now, today,
+  /** The full batch pipeline for the poll at `now`. */
+  def run(spark: SparkSession, dir: String, mode: Mode, now: Instant,
+          lookbackSeconds: Long, zone: String): DataFrame = {
+    val (nowStr, today) = localNowStrings(now, zone)
+    dedup(parse(snapshot(loadTables(spark, dir), mode, nowStr, today,
       lookbackBound(now, zone, lookbackSeconds)), zone))
+  }
 }

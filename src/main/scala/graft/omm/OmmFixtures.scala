@@ -23,6 +23,8 @@ object OmmFixtures {
 
   val dir = "/root/repo/fixtures/omm"
 
+  /** The evaluation point as an instant, and as its wall-clock strings. */
+  val nowInstant: java.time.Instant = java.time.Instant.parse("2024-05-15T09:00:00Z")
   val now = "2024-05-15 12:00:00"
   val today = "2024-05-15"
   val lookbackSeconds = 1800L
@@ -30,7 +32,7 @@ object OmmFixtures {
   /** Pre-rendered PAST-mode lookback bound (instant-space subtraction,
     * = "2024-05-15 11:30:00" — no DST transition at the fixture instant). */
   val lookback: String =
-    CancellationPipeline.lookbackBound(now, zone, lookbackSeconds)
+    CancellationPipeline.lookbackBound(nowInstant, zone, lookbackSeconds)
 
   def path(table: String): String = s"$dir/$table.parquet"
 

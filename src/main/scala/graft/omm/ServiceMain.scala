@@ -25,6 +25,27 @@ import graft.streaming.CancellationStream
   */
 object ServiceMain {
 
+  /** The service's session. Shuffle partitions default to one per core:
+    * Spark's own default of 200 turns a 20k-case warm poll from ~5 s into
+    * ~21 s of per-task overhead (perfbench/README.md). */
+  def session(): SparkSession = {
+    val spark = SparkSession.builder()
+      .appName("transitdata-omm-cancellation-source-spark")
+      .config("spark.sql.session.timeZone", "UTC")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    defaultShufflePartitions(spark)
+  }
+
+  /** Sets `spark.sql.shuffle.partitions` to the session's core count
+    * unless the user set it (e.g. `spark-submit --conf`). */
+  def defaultShufflePartitions(spark: SparkSession): SparkSession = {
+    val key = "spark.sql.shuffle.partitions"
+    if (!spark.conf.getAll.contains(key)) // explicitly set entries only
+      spark.conf.set(key, spark.sparkContext.defaultParallelism.toLong)
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     val confText = sys.env.get("GRAFT_CONF_FILE")
       .map(p => java.nio.file.Files.readString(java.nio.file.Paths.get(p)))
@@ -33,11 +54,7 @@ object ServiceMain {
     // silent default (≙ Main.java:36–44 System.exit(1))
     val config = OmmConfig.fromConf(confText)
 
-    val spark = SparkSession.builder()
-      .appName("transitdata-omm-cancellation-source-spark")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
 
     val tablesDir = config.connectionString match {
       case Some(_) => null // loadTables goes through JDBC below

@@ -33,10 +33,19 @@ object Dedup {
   /** A2: batch-over-batch diff ≙ logChangesInCancellations
     * (OmmCancellationHandler.java:206–226). The reference's O(n²) nested loop
     * becomes a hash left-anti join. Returns (new, repeated) counts as one row. */
-  def batchDiffCounts(curr: DataFrame, prev: DataFrame, key: String): DataFrame = {
-    val c = curr.select(col(key)).distinct()
-    val p = prev.select(col(key)).distinct().withColumnRenamed(key, "__pk")
-    c.join(p, c(key) === col("__pk"), "left")
+  def batchDiffCounts(curr: DataFrame, prev: DataFrame, key: String): DataFrame =
+    diffCounts(distinctKeys(curr, key), distinctKeys(prev, key), key)
+
+  /** The distinct values of `key`, as a one-column frame. */
+  def distinctKeys(df: DataFrame, key: String): DataFrame =
+    df.select(col(key)).distinct()
+
+  /** `batchDiffCounts` over key sets that are already distinct (each key
+    * once per side, e.g. `distinctKeys` output a caller has written), so no
+    * further dedup shuffle runs. */
+  def diffCounts(currKeys: DataFrame, prevKeys: DataFrame, key: String): DataFrame = {
+    val c = currKeys.select(col(key))
+    c.join(prevKeys.select(col(key).as("__pk")), c(key) === col("__pk"), "left")
       .agg(
         count(when(col("__pk").isNull, 1)).as("new_keys"),
         count(when(col("__pk").isNotNull, 1)).as("repeated_keys"))

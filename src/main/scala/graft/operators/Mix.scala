@@ -191,13 +191,21 @@ object Mix {
       .filter(col("cat").isin(norm.map(_._1): _*))
       .groupBy(col("cat")).agg(count(lit(1)).as("n"))
       .select(col("cat"), col("n"), tgt.as("tgt"))
-    // a target category absent from the corpus caps T at 0 — fail fast
+    // a target category absent from the corpus caps T at 0 — fail fast.
+    // The check throws inside a UDF, which Spark reports as a
+    // SparkException however many query stages fail at once; raise_error's
+    // SparkRuntimeException would come back bare when one stage fails and
+    // wrapped in a SparkException when several race to fail.
+    val nTargets = norm.size
+    val allTargetsPresent = udf { (k: Long, t: java.lang.Double) =>
+      require(k >= nTargets, "rebalanceToTarget: a target category is " +
+        s"absent from the corpus (found fewer than $nTargets target " +
+        "categories)")
+      t
+    }.withName("rebalance_targets_present")
     val nCats = cnt.agg(count(lit(1)).as("k"),
       min(col("n").cast("double") / col("tgt")).as("t"))
-      .select(when(col("k") < norm.size, raise_error(lit(
-        s"rebalanceToTarget: a target category is absent from the " +
-          s"corpus (found fewer than ${norm.size} target categories)"))
-        .cast("double")).otherwise(col("t")).as("t"))
+      .select(allTargetsPresent(col("k"), col("t")).as("t"))
     cnt.crossJoin(broadcast(nCats))
       .select(col("cat"), col("n"), col("tgt"),
         least(lit(scale.toLong), floor(round(

@@ -1,12 +1,12 @@
 package graft.streaming
 
 import java.time.Instant
-import java.time.format.DateTimeFormatter
-import java.time.ZoneId
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.omm.{CancellationPipeline => P}
 import graft.operators.Dedup
@@ -30,36 +30,32 @@ object CancellationStream {
 
   /** U2/U3 driver-side: render the per-poll instant as wall-clock strings
     * in the OMM zone (≙ OmmConnector.java:53–59). */
-  def localNowStrings(instant: Instant, zone: String): (String, String) = {
-    val z = instant.atZone(ZoneId.of(zone))
-    (z.format(DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")),
-      z.format(DateTimeFormatter.ofPattern("yyyy-MM-dd")))
-  }
+  def localNowStrings(instant: Instant, zone: String): (String, String) =
+    P.localNowStrings(instant, zone)
 
   case class PollResult(sent: Long, newTrips: Long, repeatedTrips: Long)
 
-  /** One poll ≙ one micro-batch: snapshot → parse → dedup, A2 diff against
-    * the previous poll's key set, append the envelope to the keyed sink,
-    * replace the state. Returns the per-poll counts (A3 metrics,
-    * ≙ Hand:223–224). */
   /** Slow-poll warning threshold ≙ OmmConnector.java:86–89. */
   val slowPollWarnMs = 4000L
 
+  /** The cross-poll state: the distinct trip ids of the last committed
+    * poll. Reads pin this schema, so no Spark job infers it. */
+  private val keySchema = StructType(Seq(StructField("trip_id", StringType)))
+
+  /** One poll ≙ one micro-batch: snapshot → parse → dedup, A2 diff against
+    * the previous poll's key set, append the envelope to the keyed sink,
+    * commit the poll's key set as the new state. Returns the per-poll
+    * counts (A3 metrics, ≙ Hand:223–224). */
   def pollOnce(spark: SparkSession, tablesDir: String, sinkDir: String,
                stateDir: String, mode: P.Mode, nowInstant: Instant,
                lookbackSeconds: Long, zone: String,
                tableLoader: Option[SparkSession => P.OmmTables] = None): PollResult = {
     val t0 = System.nanoTime()
     val (now, today) = localNowStrings(nowInstant, zone)
-    // PAST-mode lookback: subtract on the Instant, render in the zone
-    // (≙ OmmConnector.java:76) — wall-clock subtraction would drift across
-    // DST transitions.
-    val lookback = nowInstant.minusSeconds(lookbackSeconds)
-      .atZone(ZoneId.of(zone))
-      .format(DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+    val lookback = P.lookbackBound(nowInstant, zone, lookbackSeconds)
     // One poll = ONE evaluation of the 10-join snapshot+parse+dedup: the
     // result is persisted, the first action below materializes the cache,
-    // and the diff/count/sink/state actions all read the InMemoryRelation
+    // and the key-set/sink actions all read the InMemoryRelation
     // (asserted in CancellationStreamSpec). Without the persist each action
     // re-ran the whole pipeline — 4 evaluations per poll, the first thing
     // to blow the 30 s poll budget at scale.
@@ -71,18 +67,21 @@ object CancellationStream {
     try {
       val sent = deduped.count() // materializes the cache
 
-      // A2: hash anti-join against the checkpointed previous key set.
-      val prevKeys: Option[DataFrame] =
-        if (new java.io.File(stateDir).exists)
-          Some(spark.read.parquet(stateDir))
-        else None
-      val (newT, repT) = prevKeys match {
-        case Some(prev) =>
-          val d = Dedup.batchDiffCounts(deduped, prev, "trip_id")
+      // A2: the poll's distinct trip ids are computed once and written to
+      // the uncommitted next state; the new/repeated counts are a hash
+      // left join of that key set against the previous poll's.
+      val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      val (state, next) = (new Path(stateDir), new Path(stateDir + "_next"))
+      Dedup.distinctKeys(deduped, "trip_id")
+        .write.mode("overwrite").parquet(next.toString)
+      def keys(p: Path): DataFrame =
+        spark.read.schema(keySchema).parquet(p.toString)
+      val (newT, repT) =
+        if (fs.exists(state)) {
+          val d = Dedup.diffCounts(keys(next), keys(state), "trip_id")
             .collect()(0)
           (d.getLong(0), d.getLong(1))
-        case None => (deduped.select("trip_id").distinct().count(), 0L)
-      }
+        } else (keys(next).count(), 0L)
 
       // S4: keyed envelope appended per poll (≙ per-record producer.send),
       // in DC.last_modified send order (O1, applied here at the sink).
@@ -90,16 +89,14 @@ object CancellationStream {
         .withColumn("poll_time", lit(now))
         .write.mode("append").parquet(sinkDir)
 
-      // Replace state AFTER the sink write (at-least-once on restart — the
-      // reference's semantics are also at-least-once, SURVEY.md §2.9).
-      val tmp = stateDir + "_next"
-      deduped.select("trip_id").distinct()
-        .write.mode("overwrite").parquet(tmp)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(stateDir), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(stateDir))
+      // Commit the key set AFTER the sink write (at-least-once on restart —
+      // the reference's semantics are also at-least-once, SURVEY.md §2.9).
+      // A poll that dies before this point leaves the previous state
+      // untouched. The swap is delete-then-rename, not atomic: a crash
+      // between the two leaves no state, and the next poll counts every
+      // trip as new.
+      fs.delete(state, true)
+      fs.rename(next, state)
 
       val elapsedMs = (System.nanoTime() - t0) / 1000000L
       if (elapsedMs > slowPollWarnMs)

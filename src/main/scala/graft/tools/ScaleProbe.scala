@@ -2697,13 +2697,15 @@ object ScaleProbe {
     time(s"generate OMM tables ($nCases cases)") { genOmm(spark, dir, nCases) }
     val t = P.loadTables(spark, dir)
     val now = "2024-05-15 12:00:00"; val today = "2024-05-15"
+    val lookback = P.lookbackBound(java.time.Instant.parse("2024-05-15T09:00:00Z"),
+      "Europe/Helsinki", 1800L)
 
-    val snap = P.snapshot(t, P.FromNow, now, today, P.lookbackBound(now, "Europe/Helsinki", 1800L))
+    val snap = P.snapshot(t, P.FromNow, now, today, lookback)
     val nSnap = time("NOW snapshot count") { snap.count() }
     val deduped = P.dedup(P.parse(snap, "Europe/Helsinki"))
     val nDedup = time("parse+dedup count") { deduped.count() }
     val nPast = time("PAST snapshot count") {
-      P.snapshot(t, P.FromPast, now, today, P.lookbackBound(now, "Europe/Helsinki", 1800L)).count()
+      P.snapshot(t, P.FromPast, now, today, lookback).count()
     }
     println(s"[probe] rows: snapshot=$nSnap deduped=$nDedup past=$nPast")
 

@@ -95,7 +95,8 @@ class PipelineGoldenSpec extends SparkSpec {
   test("A2 diff vs a later poll finds new + repeated trips") {
     val prev = P.dedup(P.parse(P.snapshot(tables, P.FromNow,
       "2024-05-17 12:00:00", "2024-05-17",
-      P.lookbackBound("2024-05-17 12:00:00", F.zone, F.lookbackSeconds)), F.zone))
+      P.lookbackBound(java.time.Instant.parse("2024-05-17T09:00:00Z"), F.zone,
+        F.lookbackSeconds)), F.zone))
     val diff = graft.operators.Dedup.batchDiffCounts(deduped, prev, "trip_id")
       .as[(Long, Long)].head()
     assert(diff === ((2L, 3L))) // 602, 604 new; 601, 603, 613 repeated

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.time.Instant
 
 import graft.SparkSpec
@@ -20,6 +20,24 @@ class CancellationStreamSpec extends SparkSpec {
       (("2024-05-15 12:00:00", "2024-05-15")))
     assert(CancellationStream.localNowStrings(t2, "UTC") ===
       (("2024-05-15 09:00:00", "2024-05-15")))
+  }
+
+  test("PAST lookback is taken on the poll instant, also in the DST " +
+    "fall-back hour") {
+    // 2024-10-27 03:30 Helsinki happens twice: at 00:30Z (EEST, +3) and at
+    // 01:30Z (EET, +2). One hour back from the second is the first.
+    val first = Instant.parse("2024-10-27T00:30:00Z")
+    val second = Instant.parse("2024-10-27T01:30:00Z")
+    assert(CancellationStream.localNowStrings(first, F.zone)._1 ===
+      "2024-10-27 03:30:00")
+    assert(CancellationStream.localNowStrings(second, F.zone)._1 ===
+      "2024-10-27 03:30:00")
+    assert(P.lookbackBound(second, F.zone, 3600L) === "2024-10-27 03:30:00")
+    // re-parsing the wall-clock string would pick the earlier offset and
+    // give the first occurrence's bound, an hour wider
+    assert(P.lookbackBound(first, F.zone, 3600L) === "2024-10-27 02:30:00")
+    assert(P.lookbackBound(F.nowInstant, F.zone, F.lookbackSeconds) ===
+      "2024-05-15 11:30:00")
   }
 
   test("two polls: state diff matches the golden A2 counts") {
@@ -48,7 +66,7 @@ class CancellationStreamSpec extends SparkSpec {
     F.ensure(spark)
     // replicate pollOnce's structure: persist + materialize, then check the
     // sink-side plan reads the cache instead of re-running the 10-join tree
-    val deduped = P.run(spark, F.dir, P.FromNow, F.now, F.today,
+    val deduped = P.run(spark, F.dir, P.FromNow, F.nowInstant,
       F.lookbackSeconds, F.zone).persist()
     try {
       deduped.count()
@@ -217,5 +235,49 @@ class CancellationStreamSpec extends SparkSpec {
       "recovery re-sends the full key set as new (at-least-once)")
     assert(spark.read.parquet(s"$crashBase/sink").count() === r1.sent + r2.sent,
       "both deliveries present in the sink — duplicates, never loss")
+  }
+
+  test("crash window: a poll that dies after writing the next key set and " +
+    "before the sink leaves the previous state, and its re-run counts as " +
+    "an uninterrupted poll would") {
+    F.ensure(spark)
+    val base = Files.createTempDirectory("streamw").toString
+    val (sink, state) = (s"$base/sink", s"$base/state")
+    CancellationStream.pollOnce(spark, F.dir, sink, state, P.FromNow, t1,
+      F.lookbackSeconds, F.zone)
+    val before = spark.read.parquet(state).collect().map(_.getString(0)).toSet
+    assert(before === Set("601", "603", "613"))
+
+    // the sink path is a regular file: the poll writes its key set to
+    // state_next, then dies in the sink write
+    val blocked = s"$base/blocked"
+    Files.writeString(Paths.get(blocked), "not a directory")
+    intercept[Exception] {
+      CancellationStream.pollOnce(spark, F.dir, blocked, state, P.FromNow, t2,
+        F.lookbackSeconds, F.zone)
+    }
+    assert(Files.exists(Paths.get(s"${state}_next")),
+      "the crash should fall after the key-set write")
+    assert(spark.read.parquet(state).collect().map(_.getString(0)).toSet ===
+      before, "the uncommitted key set must not replace the state")
+
+    val r = CancellationStream.pollOnce(spark, F.dir, sink, state, P.FromNow,
+      t2, F.lookbackSeconds, F.zone)
+    assert(r === CancellationStream.PollResult(6, 2, 3),
+      "same counts as the uninterrupted second poll")
+    assert(spark.read.parquet(state).count() === 5)
+    assert(spark.read.parquet(sink).count() === 4 + 6)
+  }
+
+  test("a fixture-scale poll submits at most 22 Spark jobs") {
+    F.ensure(spark)
+    val base = Files.createTempDirectory("streamj").toString
+    def poll(now: Instant) = graft.SparkJobs.count(spark) {
+      CancellationStream.pollOnce(spark, F.dir, s"$base/sink", s"$base/state",
+        P.FromNow, now, F.lookbackSeconds, F.zone)
+    }._2
+    poll(t1) // first poll: no previous state
+    val jobs = poll(t2)
+    assert(jobs <= 22, s"a warm poll submitted $jobs jobs")
   }
 }
